@@ -1,18 +1,32 @@
 """Untimed output checks against DuckDB twins.
 
-Frames are compared with the rule the repository's oracle tests use
-(``tests/conftest.py:assert_matches_oracle``): same column set, same row
-count, then columns sorted by name, floats rounded to 6, values
-stringified and rows sorted before an exact comparison.
+Frames are compared with the rule of the repository's oracle tests,
+imported from ``tests/conftest.py`` so the two cannot drift apart: same
+column set, same row count, then columns sorted by name, floats rounded
+to 6, values stringified and rows sorted before an exact comparison.
 """
 
 from __future__ import annotations
 
 import hashlib
+import importlib.util
 from pathlib import Path
+from types import SimpleNamespace
 
 import duckdb
 import pandas as pd
+
+
+def _load_oracle_rule():
+    # by path: ``import tests.conftest`` would find perfbench/tests first
+    path = Path(__file__).resolve().parent.parent / "tests" / "conftest.py"
+    spec = importlib.util.spec_from_file_location("perfbench_oracle_rule", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module._normalize, module.assert_matches_oracle
+
+
+_normalize, assert_matches_oracle = _load_oracle_rule()
 
 INPUT_TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -35,32 +49,19 @@ def table_ref(wh_dir: str | Path, table: str) -> str:
     return f"read_parquet('{Path(wh_dir) / table}/*.parquet')"
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_float_dtype(df[c]):
-            df[c] = df[c].round(6)
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]")
-    out = df.astype(str)
-    return out.sort_values(by=list(out.columns)).reset_index(drop=True)
-
-
-def mismatch(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
-    """None when the frames match, else a one-line reason."""
-    if sorted(got.columns) != sorted(want.columns):
-        return f"columns {sorted(got.columns)} != {sorted(want.columns)}"
-    if len(got) != len(want):
-        return f"row count {len(got)} != {len(want)}"
-    g, w = normalize(got), normalize(want)
-    if not g.equals(w):
-        return f"{int((g != w).any(axis=1).sum())} rows differ"
+def mismatch(got: pd.DataFrame, con: duckdb.DuckDBPyConnection, sql: str) -> str | None:
+    """None when ``got`` matches the result of ``sql`` on ``con`` by the
+    oracle tests' rule, else the first line of that rule's failure."""
+    try:
+        assert_matches_oracle(SimpleNamespace(toPandas=lambda: got), con, sql)
+    except AssertionError as e:
+        return str(e).splitlines()[0]
     return None
 
 
 def digest(df: pd.DataFrame) -> str:
     """Order-insensitive content hash, for comparing repeated results."""
-    norm = normalize(df)
+    norm = _normalize(df)
     h = hashlib.sha256("\x1f".join(norm.columns).encode())
     for row in norm.itertuples(index=False):
         h.update("\x1f".join(row).encode())
@@ -91,6 +92,5 @@ def check_warehouse(
     out = {}
     for table, sql in warehouse_oracles().items():
         got = con.execute(f"SELECT * FROM {table_ref(wh_dir, table)}").fetchdf()
-        want = con.execute(sql).fetchdf()
-        out[table] = (mismatch(got, want), digest(got))
+        out[table] = (mismatch(got, con, sql), digest(got))
     return out

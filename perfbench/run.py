@@ -115,11 +115,15 @@ def install_layer_spans(tracer) -> None:
     """Wrap the public function of each layer the workloads call into."""
     from dw_etl_spark.plans import star_schema
     from dw_etl_spark.sinks import warehouse
-    from perfbench.metrics import BUILDERS
+    from perfbench.metrics import BUILDERS, OPERATORS
 
     tracer.patch(star_schema, "build_star_schema", "plans.build_star_schema")
     for b in BUILDERS:
         tracer.patch(star_schema, f"build_{b}", f"plans.build_{b}")
+    # the ETL operators, under the names the plans module calls them by
+    for group, fns in OPERATORS.items():
+        for fn in fns:
+            tracer.patch(star_schema, fn, f"operators.{group}")
     tracer.patch(star_schema, "read_table", "sources.read_table")
     tracer.patch(warehouse, "load_star_schema", "sinks.load_star_schema")
     tracer.patch(
@@ -184,9 +188,7 @@ def main(argv: list[str] | None = None) -> int:
 
     sys.path.insert(0, str(ROOT))
     from perfbench import metrics, workloads
-    from perfbench.tracing import (
-        EngineCounters, Tracer, tree_cpu_s, tree_peak_rss_mb,
-    )
+    from perfbench.tracing import EngineCounters, Tracer, tree_peak_rss_mb
 
     work = BENCH / ".work" / f"{args.workload}-{os.getpid()}"
     cache = BENCH / ".cache"
@@ -210,9 +212,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.trace:
             install_layer_spans(tracer)
             ctx.engine.collect()  # set-up's jobs are not an op's
-        cpu0 = tree_cpu_s(os.getpid())
         workloads.WORKLOADS[args.workload](ctx)
-        cpu = tree_cpu_s(os.getpid()) - cpu0
         rss_by_process = tree_peak_rss_mb(os.getpid())
         tracer.unpatch()
     finally:
@@ -225,7 +225,7 @@ def main(argv: list[str] | None = None) -> int:
         workload=args.workload, cores=cores(),
         setup_start_s=start_s, setup_warmup_s=warmup_s,
         ops=ctx.ops, window_s=ctx.window_s, peak_rss_mb=sum(rss_by_process.values()),
-        proc_cpu_s=cpu,
+        proc_cpu_s=ctx.cpu_s,
         input_bytes=ctx.input_bytes, pinned_mb=ctx.pinned,
         spans=tracer.finished(), jobs=ctx.jobs, stages=ctx.stages,
         overhead_s=tracer.overhead_s,

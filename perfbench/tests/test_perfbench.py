@@ -134,6 +134,7 @@ def _synthetic_run(workload: str) -> metrics.Run:
         Span(2, "sinks.load_star_schema", 1, 1, 1.0, 4.0),
         Span(3, "sinks.write_table.FACT_LineItem", 1, 2, 2.0, 3.5),
         Span(4, "sinks.read_table", 1, 1, 0.0, 0.5),
+        Span(5, "operators.keys", 1, 1, 0.5, 0.75),
     ]
     stage = {
         "stage": 0, "span": 3, "op": 1, "skipped": False,
@@ -169,6 +170,7 @@ def test_runner_reports_every_metric_of_benchmark_json(workload):
     assert layer["sinks.write_table.FACT_LineItem.start_offset_s"] == 1.0
     assert layer["engine.write_table.FACT_LineItem.tasks"] == 1.0
     assert layer["sinks.load_star_schema.self_s"] == pytest.approx(1.5)
+    assert layer["operators.keys.s"] == pytest.approx(0.25)
 
 
 def test_bi_queries_run_on_duckdb_without_nulls(tmp_path):

@@ -8,10 +8,10 @@ build+load on every run, so that is the op it times.
 
 ``bi_dashboard`` (closed loop, 2 client threads sharing one session):
 the read-side twin. The clients share one seeded stream of whole passes
-over the query set: two untimed passes, then ``--seconds`` / 3 timed
-ones. Each query reopens its tables through the warehouse sink and runs
-``spark.sql(...).collect()``; fixed per-query driver cost and slot
-contention dominate.
+over the query set: eight untimed passes, then ``--seconds`` / 1.8
+timed ones. Each query reopens its tables through the warehouse sink
+and runs ``spark.sql(...).collect()``; fixed per-query driver cost and
+slot contention dominate.
 
 Run ``python -m perfbench.workloads <extract_dir> <warehouse_dir>`` to
 build a checked warehouse with the ETL in a process of its own; the
@@ -20,6 +20,7 @@ dashboard runs over one built that way.
 
 from __future__ import annotations
 
+import contextlib
 import gc
 import os
 import shutil
@@ -30,6 +31,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
+from typing import Iterator
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -37,22 +39,27 @@ import pyarrow.parquet as pq
 from perfbench import checks
 from perfbench.metrics import Op
 from perfbench.queries import QUERIES, TABLE_ARGS, QueryStream
-from perfbench.tracing import EngineCounters, Tracer, pinned_mb
+from perfbench.tracing import EngineCounters, Tracer, pinned_mb, tree_cpu_s
 
 ROOT = Path(__file__).resolve().parent.parent
 
-# Input size. A cold build+load costs 20-40 s at sf0.01 on a 4-core box,
-# nearly all of it JVM warm-up, and a dashboard query ~1 s, nearly all
-# of it per-query driver cost; larger extracts lengthen runs past what a
-# run may take without changing what is measured.
+# Input size. On a 4-core x86 box a build+load in one JVM took 17.6 s
+# cold, then 6.2-7.4 s warm at sf0.01, and 25.8 s cold, then 10.6-13.3 s
+# warm at sf0.1: the timed cold op is about two thirds JVM and
+# first-run warm-up, and sf0.1 adds ~8 s of data work to it. sf0.01
+# keeps both workloads' runs, checks included, inside the run budget.
 SF = 0.01
 # The dashboard's warehouse comes from one fixed extract, built once per
 # checkout: a cold ETL per run would double the run. The run's seed
 # draws the query stream instead.
 BI_DATA_SEED = 42
 BI_CLIENTS = 2
-WARM_UP_PASSES = 2
-PASS_S = 3.0  # nominal seconds per timed pass: --seconds sets the pass count
+# Untimed passes before the window. Per-query latency falls for the
+# first ~50 queries (8 passes of 6) as the JVM compiles the planner and
+# the generated code, then stays flat within noise: 806, 585, 626, then
+# 440-530 ms medians per 12 queries on a 4-core x86 box.
+WARM_UP_PASSES = 8
+PASS_S = 1.8  # nominal seconds per warm pass: --seconds sets the pass count
 FACT = "FACT_LineItem"
 SOURCE_TABLES = ["lineitem", "orders", "part", "events"]  # what the ETL reads
 
@@ -133,11 +140,21 @@ class Context:
     input_bytes: int = 0
     checks: list[str] = field(default_factory=list)  # failure reasons
     window_s: float = 0.0
+    cpu_s: float = 0.0  # process-tree CPU inside the timed window
     _lock: threading.Lock = field(default_factory=threading.Lock)
 
+    @contextlib.contextmanager
+    def window(self) -> Iterator[None]:
+        """The timed window: wall time and process-tree CPU of the timed
+        ops only, not of inputs, warm-up, between-op work or checks."""
+        cpu0 = tree_cpu_s(os.getpid())
+        begin = time.perf_counter()
+        yield
+        self.window_s = time.perf_counter() - begin
+        self.cpu_s = tree_cpu_s(os.getpid()) - cpu0
+
     def timed(self, name: str, fn) -> tuple[Op, object]:
-        """Run one op inside an op span; record it, then do the untimed
-        between-op work (pinned-memory reading, counters, cache reset)."""
+        """Run one op inside an op span and record it."""
         result = None
         with self.tracer.span(f"op.{name}", op=True) as sp:
             start = time.perf_counter()
@@ -147,28 +164,25 @@ class Context:
             except Exception as e:  # an op failure is a measured outcome
                 op = Op(name, start, time.perf_counter(), ok=False,
                         error=f"{type(e).__name__}: {e}"[:300], span=sp and sp.id)
-        self.after_op(op)
         with self._lock:
             self.ops.append(op)
         return op, result
 
-    def after_op(self, op: Op) -> None:
-        sc = self.spark.sparkContext
-        mb = pinned_mb(sc)
+    def between_ops(self, op: Op | None = None) -> None:
+        """Untimed work while no op runs: read pinned memory, collect the
+        engine counters of the ops since the last call, then reset the
+        cache. Stages no span tagged (e.g. the fact-pin prewarm thread)
+        go to ``op``, the one op that ran, if given."""
+        mb = pinned_mb(self.spark.sparkContext)
         if self.engine is not None:
             jobs, stages = self.engine.collect()
             for rec in jobs + stages:
                 span = self.tracer.spans.get(rec["span"])
-                if span is not None:
-                    rec["op"] = span.op
-                else:  # untagged, e.g. the fact-pin prewarm thread
-                    rec["op"] = op.span if self.clients == 1 else None
-            with self._lock:
-                self.jobs += jobs
-                self.stages += stages
+                rec["op"] = span.op if span is not None else op and op.span
+            self.jobs += jobs
+            self.stages += stages
         reset_cached_state(self.spark)
-        with self._lock:
-            self.pinned.append(mb)
+        self.pinned.append(mb)
 
 
 def reset_cached_state(spark) -> None:
@@ -188,8 +202,9 @@ def etl_nightly(ctx: Context) -> None:
     ctx.input_bytes = sum(ctx.inputs[t]["bytes"] for t in SOURCE_TABLES)
     # one build+load per fresh JVM, as the nightly job runs
     wh = ctx.work / "warehouse"
-    op, _ = ctx.timed("etl_nightly", lambda: build_and_load(ctx.spark, sf_dir, wh))
-    ctx.window_s = op.seconds
+    with ctx.window():
+        op, _ = ctx.timed("etl_nightly", lambda: build_and_load(ctx.spark, sf_dir, wh))
+    ctx.between_ops(op)
     ctx.checks += check_build(op, wh, sf_dir)
 
 
@@ -248,22 +263,7 @@ def bi_dashboard(ctx: Context) -> None:
             rows = df.collect()
         return df.columns, rows
 
-    results: dict[tuple, tuple[pd.DataFrame, str]] = {}
-    failed_keys: dict[tuple, str] = {}
-    keyed_ops: list[tuple[tuple, Op]] = []
-
-    def check_result(name: str, p: dict, op: Op, out) -> None:
-        key = (name, tuple(sorted(p.items())))
-        with ctx._lock:
-            keyed_ops.append((key, op))
-        if not op.ok:
-            return
-        cols, rows = out
-        frame = pd.DataFrame.from_records([tuple(r) for r in rows], columns=cols)
-        dig = checks.digest(frame)
-        with ctx._lock:
-            if results.setdefault(key, (frame, dig))[1] != dig:
-                failed_keys[key] = "digest differs from the first result"
+    outputs: list[tuple[str, dict, Op, object]] = []  # checked after the window
 
     def drain(stream: QueryStream, record) -> None:
         with ThreadPoolExecutor(BI_CLIENTS) as ex:
@@ -275,38 +275,52 @@ def bi_dashboard(ctx: Context) -> None:
             name, p = item
             if record:
                 op, out = ctx.timed(name, lambda: run_query(name, p))
-                check_result(name, p, op, out)
+                with ctx._lock:
+                    outputs.append((name, p, op, out))
             else:
                 run_query(name, p)
 
-    # untimed warm-up; latency keeps falling for ~100 queries as the JVM
-    # compiles the planner, which is why the window is a fixed count of
-    # passes: every run times the same stream positions
+    # untimed warm-up past the compile slope; the window is a fixed count
+    # of passes, so every run times the same stream positions
     drain(QueryStream(f"{ctx.seed}:warm-up", n_orders, WARM_UP_PASSES), False)
     if ctx.engine is not None:
         ctx.engine.collect()
     reset_cached_state(ctx.spark)
 
-    begin = time.perf_counter()
     passes = max(1, round(ctx.seconds / PASS_S))
-    drain(QueryStream(f"{ctx.seed}:window", n_orders, passes), True)
-    ctx.window_s = time.perf_counter() - begin
+    with ctx.window():
+        drain(QueryStream(f"{ctx.seed}:window", n_orders, passes), True)
+    # between-op work waits until both clients are idle, so it never runs
+    # inside the other client's timed query; the window's few hundred
+    # jobs stay well inside the status store's retention (1000 jobs)
+    ctx.between_ops()
 
+    # untimed checks: a repeated query must return its first result, and
+    # each distinct result must match DuckDB on the committed parquet
+    results: dict[tuple, tuple[pd.DataFrame, str]] = {}
+    failed_keys: dict[tuple, str] = {}
+    for name, p, op, out in outputs:
+        if op.ok:
+            frame = pd.DataFrame.from_records([tuple(r) for r in out[1]], columns=out[0])
+            dig = checks.digest(frame)
+            key = (name, tuple(sorted(p.items())))
+            if results.setdefault(key, (frame, dig))[1] != dig:
+                failed_keys[key] = "digest differs from the first result"
     con = checks.input_conn(sf_dir)
     refs = {a: checks.table_ref(wh, t) for a, t in TABLE_ARGS.items()}
     for key, (frame, _) in results.items():
         name, p = key[0], dict(key[1])
-        want = con.execute(QUERIES[name][0].format(**refs, **p)).fetchdf()
-        why = checks.mismatch(frame, want)
+        why = checks.mismatch(frame, con, QUERIES[name][0].format(**refs, **p))
         if why is not None:
             failed_keys.setdefault(key, why)
     con.close()
-    for key, op in keyed_ops:
+    for name, p, op, _ in outputs:
+        key = (name, tuple(sorted(p.items())))
         if not op.ok:
             ctx.checks.append(f"{op.name}: {op.error}")
         elif key in failed_keys:
             op.ok = False
-            ctx.checks.append(f"{op.name}{dict(key[1]) or ''}: {failed_keys[key]}")
+            ctx.checks.append(f"{op.name}{p or ''}: {failed_keys[key]}")
 
 
 WORKLOADS = {"etl_nightly": etl_nightly, "bi_dashboard": bi_dashboard}

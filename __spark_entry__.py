@@ -40,7 +40,6 @@ from dw_etl_spark.operators.profile import (
 )
 from dw_etl_spark.operators.similarity import (
     cosine_topk,
-    cosine_topk_arrow,
     embedding_dup_pairs,
     ivf_topk,
     lsh_topk,

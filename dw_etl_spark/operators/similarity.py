@@ -956,13 +956,18 @@ def collect_query_vectors(
 
 
 def _round_half_up(x: float, scale: int) -> float:
-    """Replicate Spark's ``round(double, n)`` exactly: Java does
-    ``BigDecimal.valueOf(x)`` (the SHORTEST decimal string that
-    round-trips — the same contract as Python ``repr(float)``), then
-    ``setScale(n, HALF_UP)``, then back to the nearest double. Both
-    languages' shortest-repr algorithms produce the identical decimal
-    value, quantize identically, and the final conversion is correctly
-    rounded — so this is bit-identical to the JVM expression."""
+    """Replicate Spark's ``round(double, n)``: Java does
+    ``BigDecimal.valueOf(x)`` (the decimal string of
+    ``Double.toString(x)``), then ``setScale(n, HALF_UP)``, then back to
+    the nearest double. This mirrors it with Python ``repr(float)``,
+    the shortest decimal that round-trips.
+
+    Assumption: ``Double.toString`` also returns the shortest
+    round-trip decimal. That holds from JDK 19 on (JDK-4511638); JDK 17
+    and earlier sometimes emit a longer decimal, and a value whose
+    extra digits sit on a HALF_UP boundary can then round differently.
+    The bit-identity tests against the JVM expression pin only the JVM
+    they run on."""
     import decimal
 
     return float(

@@ -29,6 +29,7 @@ Two backends behind one interface:
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
@@ -128,8 +129,32 @@ def _table_lock(path: str) -> threading.Lock:
         return _TABLE_LOCKS.setdefault(path, threading.Lock())
 
 
+# ParquetWarehouse.read_table's relation cache: (session, live path) ->
+# (snapshot, frame), one entry per path. Resolving a frame lists the
+# directory and runs a schema-inference job, which a hit skips.
+_RELATIONS: dict[
+    tuple[SparkSession, str], tuple[tuple[int, int, int], DataFrame]
+] = {}
+_RELATIONS_GUARD = threading.Lock()
+
+
+def _evict_relations(path: str) -> None:
+    with _RELATIONS_GUARD:
+        for key in [k for k in _RELATIONS if k[1] == path]:
+            del _RELATIONS[key]
+
+
 class ParquetWarehouse:
-    """Lake-native warehouse: parquet tables + validated constraints."""
+    """Lake-native warehouse: parquet tables + validated constraints.
+
+    ``read_table`` serves one cached frame per committed snapshot of a
+    table, shared by every instance on the same session. The cache is
+    valid only because every commit replaces the live directory through
+    the swap protocol (``write_table``, ``drop_table`` or a staging
+    write plus ``_commit_swap`` from another process). A file edited,
+    added or removed in place inside a live table directory is not
+    detected reliably, and the served frame may name stale files.
+    """
 
     def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
@@ -179,10 +204,40 @@ class ParquetWarehouse:
         p = Path(self._path(name))
         if p.exists():
             shutil.rmtree(p)
+        _evict_relations(str(p))
 
     def read_table(self, name: str) -> DataFrame:  # S6-ish
+        """The committed table as a frame, resolved once per snapshot.
+
+        A repeat read of an unchanged table returns the same frame
+        without listing files or starting a Spark job; a read after a
+        commit resolves the new directory. Snapshots are told apart by
+        the live directory's (inode, mtime_ns, ctime_ns), which changes
+        only because every commit swaps a new directory in — a file
+        edited in place inside a live table directory is not detected.
+        Reader options in the session conf (e.g. schema merging) are
+        applied when a snapshot is first resolved. A missing table
+        fails as ``spark.read.parquet`` does.
+        """
         self._recover(name)
-        return self.spark.read.parquet(self._path(name))
+        path = self._path(name)
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)
+        snapshot = (st.st_ino, st.st_mtime_ns, st.st_ctime_ns)
+        key = (self.spark, path)
+        with _RELATIONS_GUARD:
+            hit = _RELATIONS.get(key)
+        if hit is not None and hit[0] == snapshot:
+            return hit[1]
+        # two threads missing together both resolve and the last store
+        # wins; every later read re-checks the snapshot, so neither can
+        # serve a stale frame
+        df = self.spark.read.parquet(path)
+        with _RELATIONS_GUARD:
+            _RELATIONS[key] = (snapshot, df)
+        return df
 
     def introspect(self, name: str) -> DataFrame:  # S13
         fields = self.read_table(name).schema.fields
@@ -368,6 +423,7 @@ class ParquetWarehouse:
                 raise
             with lock:
                 _commit_swap(live)
+                _evict_relations(live)
         finally:
             with _REGISTRY_GUARD:
                 _ACTIVE_WRITES.discard(live)

@@ -287,6 +287,134 @@ def test_load_star_schema_concurrent_dim_failure_surfaces_cleanly(
     assert wh.table_exists("FACT") and wh.table_exists("DIM_B")
 
 
+def _spark_jobs(spark, fn):
+    """``fn()`` and the ids of the Spark jobs it started, counted with
+    the status tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read-table-cache-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_table cache test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_read_table_repeat_read_starts_no_spark_job(spark, tmp_path):
+    """A second read of an unchanged table returns the cached frame —
+    shared across warehouse instances on one session — and starts no
+    Spark job (no listing, no schema inference)."""
+    wh = ParquetWarehouse(spark, str(tmp_path))
+    wh.write_table(
+        spark.createDataFrame([(1, "x"), (2, "y")], ["Id", "V"]),
+        TableSpec("T", primary_key=["Id"]),
+    )
+    first, jobs = _spark_jobs(spark, lambda: wh.read_table("T"))
+    assert jobs, "a first read resolves the table with a Spark job"
+    again, jobs = _spark_jobs(spark, lambda: wh.read_table("T"))
+    assert again is first and jobs == []
+    other, jobs = _spark_jobs(
+        spark, lambda: ParquetWarehouse(spark, str(tmp_path)).read_table("T")
+    )
+    assert other is first and jobs == []
+    assert _rows(again) == [(1, "x"), (2, "y")]
+
+
+def test_read_table_after_rewrite_serves_new_rows(spark, tmp_path):
+    """A rewrite commits a new directory with a different file set; the
+    next read lists it afresh — no stale file list, no FileNotFound."""
+    wh = ParquetWarehouse(spark, str(tmp_path))
+    spec = TableSpec("T", primary_key=["Id"])
+    wh.write_table(spark.createDataFrame([(1, "x")], ["Id", "V"]), spec)
+    assert _rows(wh.read_table("T")) == [(1, "x")]
+    wh.write_table(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(10, 40)], ["Id", "V"]
+        ).repartition(3),
+        spec,
+    )
+    assert _rows(wh.read_table("T")) == [(i, f"v{i}") for i in range(10, 40)]
+
+
+def test_read_table_picks_up_swap_made_outside_the_warehouse(spark, tmp_path):
+    """A commit by another process (a staging write plus the swap) is
+    seen by the next read of a table this process already resolved."""
+    from dw_etl_spark.streaming.sinks import _commit_swap
+
+    wh = ParquetWarehouse(spark, str(tmp_path))
+    wh.write_table(
+        spark.createDataFrame([(1, "x")], ["Id", "V"]), TableSpec("T")
+    )
+    assert _rows(wh.read_table("T")) == [(1, "x")]
+    live = str(tmp_path / "T")
+    spark.createDataFrame([(2, "y"), (3, "z")], ["Id", "V"]).write.parquet(
+        f"{live}__staging"
+    )
+    _commit_swap(live)
+    assert _rows(wh.read_table("T")) == [(2, "y"), (3, "z")]
+
+
+def test_read_table_after_drop_fails_as_uncached(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    wh = ParquetWarehouse(spark, str(tmp_path))
+    wh.write_table(
+        spark.createDataFrame([(1, "x")], ["Id", "V"]), TableSpec("T")
+    )
+    assert _rows(wh.read_table("T")) == [(1, "x")]
+    wh.drop_table("T")
+    assert not wh.table_exists("T")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        wh.read_table("T")
+
+
+def test_read_table_cache_holds_one_entry_per_path(spark, tmp_path):
+    from dw_etl_spark.sinks import warehouse as wh_mod
+
+    wh = ParquetWarehouse(spark, str(tmp_path))
+    live = str(tmp_path / "T")
+
+    def entries() -> int:
+        with wh_mod._RELATIONS_GUARD:
+            return sum(1 for k in wh_mod._RELATIONS if k[1] == live)
+
+    for i in range(4):
+        wh.write_table(
+            spark.createDataFrame([(i, "v")], ["Id", "V"]), TableSpec("T")
+        )
+        assert entries() == 0  # the commit evicted the old snapshot
+        assert _rows(wh.read_table("T")) == [(i, "v")]
+        assert entries() == 1
+
+
+def test_read_table_concurrent_readers_agree(spark, tmp_path):
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    wh = ParquetWarehouse(spark, str(tmp_path))
+    wh.write_table(
+        spark.createDataFrame([(i, i * 2) for i in range(50)], ["Id", "V"]),
+        TableSpec("T", primary_key=["Id"]),
+    )
+    start = threading.Barrier(2)
+
+    def read() -> list[tuple]:
+        start.wait()
+        return _rows(wh.read_table("T"))
+
+    with ThreadPoolExecutor(2) as ex:
+        a, b = [f.result() for f in [ex.submit(read) for _ in range(2)]]
+    assert a == b == [(i, i * 2) for i in range(50)]
+
+
 def test_jdbc_ddl_generation(spark):
     assert ddl_drop_table("T") == "DROP TABLE IF EXISTS T"
     stmts = ddl_set_primary_key("T", ["Id"], {"Id": "BIGINT"})

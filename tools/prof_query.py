@@ -1,13 +1,14 @@
-"""Per-stage profile of one declared query (r14 optimization tooling).
+"""Per-stage profile of declared queries (r14 optimization tooling).
 
-Runs ``__spark_entry__.queries()[name]`` with the noop sink (guide
-§1.4) K times with the Spark event log enabled, then prints a
-stage-level breakdown parsed from the event log: per-stage wall time,
-task time, callsite, shuffle read/write bytes. This is the §1.1
-empirical loop without a live UI (spark.ui is disabled in the bench
-session): find WHERE the seconds go before touching anything.
+Runs each named ``__spark_entry__.queries()`` entry with the noop sink
+(guide §1.4) K times in one session with the Spark event log enabled,
+then prints a stage-level breakdown per query and run parsed from the
+event log: per-stage wall time, task time, callsite, shuffle
+read/write bytes. This is the §1.1 empirical loop without a live UI
+(spark.ui is disabled in the bench session): find WHERE the seconds go
+before touching anything.
 
-Usage: python tools/prof_query.py <query> [k]
+Usage: python tools/prof_query.py <query>[,<query>...] [k]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 """
 
@@ -24,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    name = sys.argv[1]
+    names = [q for q in sys.argv[1].split(",") if q]
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     evdir = tempfile.mkdtemp(prefix="spark_events_")
@@ -32,7 +33,7 @@ def main() -> None:
     from dw_etl_spark.session import get_spark
 
     spark = get_spark(
-        app_name=f"prof_{name}",
+        app_name=f"prof_{'_'.join(names)}",
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{evdir}",
@@ -48,18 +49,23 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    fn = entrymod.queries()[name]
-    times = []
-    for i in range(k):
-        spark.catalog.clearCache()
-        gc.collect()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(True)
-        spark.sparkContext.setJobGroup(f"run{i}", f"{name} run {i}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
-        print(f"[prof] {name} run{i} {times[-1]:.3f}s", file=sys.stderr)
+    qs = entrymod.queries()
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    times = {}  # job group -> wall seconds
+    for name in names:
+        for i in range(k):
+            spark.catalog.clearCache()
+            gc.collect()
+            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+                rdd.unpersist(True)
+            grp = f"{name}#run{i}"
+            spark.sparkContext.setJobGroup(grp, f"{name} run {i}")
+            t0 = time.perf_counter()
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            times[grp] = time.perf_counter() - t0
+            print(f"[prof] {name} run{i} {times[grp]:.3f}s", file=sys.stderr)
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
@@ -96,11 +102,11 @@ def main() -> None:
         _parse_event_file(path, jobs, stages)
 
     # per run-group: job wall times and top stages
-    for i in range(k):
-        grp = f"run{i}"
+    for grp, wall in times.items():
         gjobs = {jid: j for jid, j in jobs.items() if j.get("group") == grp}
         tot = sum((j.get("t1", j["t0"]) - j["t0"]) for j in gjobs.values())
-        print(f"\n== {name} run{i}: wall {times[i]:.3f}s, "
+        name, run = grp.split("#")
+        print(f"\n== {name} {run}: wall {wall:.3f}s, "
               f"{len(gjobs)} jobs, sum job wall {tot/1000:.3f}s")
         rows = []
         for jid, j in sorted(gjobs.items()):

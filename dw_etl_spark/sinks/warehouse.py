@@ -252,7 +252,6 @@ class ParquetWarehouse:
         spec: TableSpec,
         parents: dict[str, DataFrame] | None = None,
         partition_by: list[str] | None = None,
-        pin: bool = True,
         pre_commit: "Callable[[], None] | None" = None,
     ) -> None:
         """Drop-and-recreate load (S7+S9 parity): cast declared types,
@@ -279,10 +278,7 @@ class ParquetWarehouse:
         earlier load is swept before writing (``_recover``).
 
         The input lineage is computed exactly once (by the staged
-        write), so nothing is persisted here. ``pin`` is kept for API
-        compatibility and ignored — the r9 design needed it because the
-        PK aggregation and the write were two actions over ``df``; the
-        written-parquet PK check removed the second action.
+        write), so nothing is persisted here.
 
         Concurrency (r11): the recover sweep and the commit swap hold a
         per-table lock (see ``_table_lock``) and the table is marked
@@ -305,7 +301,6 @@ class ParquetWarehouse:
 
         from pyspark.sql import Observation
 
-        del pin  # single-action design: no double computation to pin
         for c, t in spec.column_types.items():  # S12: cast before write
             df = df.withColumn(c, F.col(c).cast(t))
         fks = [

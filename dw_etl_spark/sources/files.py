@@ -164,16 +164,17 @@ def read_table(
     session zone is UTC, so values are preserved):
 
     - nanosecond timestamps — rejected by Spark's vectorized reader
-      ([PARQUET_TYPE_ILLEGAL]); read as longs (``nanosAsLong``) and
-      rebuilt via integer division (``div`` — a double round-trip would
-      lose precision at 1e18 nanos);
+      ([PARQUET_TYPE_ILLEGAL]); read as longs (``nanosAsLong``, set by
+      ``allow_nanos_timestamps`` only for such a file) and rebuilt via
+      integer division (``div`` — a double round-trip would lose
+      precision at 1e18 nanos);
     - microsecond no-tz timestamps — surface as TIMESTAMP_NTZ, which
       streaming watermarks reject ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE])
       → cast.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        allow_nanos_timestamps(spark, path, "ts")
         df = read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
@@ -183,6 +184,30 @@ def read_table(
         return spread_small_scan(spark, df, path) if spread else df
     df = read_parquet(spark, path)
     return spread_small_scan(spark, df, path) if spread else df
+
+
+def allow_nanos_timestamps(spark: SparkSession, path: str, column: str) -> None:
+    """Set ``spark.sql.legacy.parquet.nanosAsLong=true`` only when the
+    parquet file at ``path`` stores ``column`` as INT64 nanosecond
+    timestamps, so reads of any other file leave the session conf as it
+    was. It is left set, not restored, because the caller's frame is
+    lazy: its scans run later, under the session conf of that time.
+
+    The probe is one pyarrow footer read (no Spark job) of a local file.
+    A URI or a path it cannot read as one file (e.g. a directory of
+    parts) sets the conf, which reads either encoding."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos = True
+    if "://" not in path:  # pyarrow would resolve a URI as a remote store
+        try:
+            ts = pq.read_schema(path).field(column).type
+            nanos = pa.types.is_timestamp(ts) and ts.unit == "ns"
+        except (OSError, KeyError, pa.ArrowException):
+            pass
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def _corrupt_schema(

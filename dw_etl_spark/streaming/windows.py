@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dw_etl_spark.sources.files import allow_nanos_timestamps
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events parquet, schema-matched to the
     batch reader (sources/files.py:read_table).
@@ -33,12 +36,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams), so the footer schema is taken from a zero-job batch read
     of the same file. That also absorbs the driver testdata's timestamp
     encoding: nanosecond parquet timestamps surface as long
-    (``nanosAsLong``) and are rebuilt with the same ``div``-based
-    expression as batch; microsecond timestamps pass through natively —
-    either way stream and batch plans see identical ``ts`` values.
+    (``nanosAsLong``, set only for such a file) and are rebuilt with the
+    same ``div``-based expression as batch; microsecond timestamps pass
+    through natively — either way stream and batch plans see identical
+    ``ts`` values.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
+    allow_nanos_timestamps(spark, path, "ts")
     stored = spark.read.parquet(path).schema  # footer only — no job
     raw = (
         spark.readStream.schema(stored)

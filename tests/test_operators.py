@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dw_etl_spark.functions.scalar import (
     clean_whitespace,
@@ -48,6 +49,64 @@ def test_spread_small_scan_parallelism_floor(spark):
     assert _estimated_scan_splits([256 * 1024**2] * 64, par) >= par
     # one huge splittable file splits by itself too
     assert _estimated_scan_splits([64 * 1024**3], par) >= par
+
+
+# ------------------------------------------------------ events timestamp reads
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_events_read_of_micros_file_leaves_session_conf(spark):
+    """The µs fixture needs no ``nanosAsLong``: neither the batch nor
+    the stream reader of ``events`` may change the session-wide conf."""
+    from tests.conftest import SF_SMOKE
+    from dw_etl_spark.sources.files import read_table
+    from dw_etl_spark.streaming import read_events_stream
+
+    prior = spark.conf.get(_NANOS_AS_LONG)
+    spark.conf.set(_NANOS_AS_LONG, "false")
+    try:
+        ev = read_table(spark, SF_SMOKE, "events")
+        read_events_stream(spark, SF_SMOKE)
+        assert spark.conf.get(_NANOS_AS_LONG) == "false"
+        assert ev.schema["ts"].dataType == T.TimestampType()
+        assert ev.count() > 0
+    finally:
+        spark.conf.set(_NANOS_AS_LONG, prior)
+
+
+def test_events_read_of_nanos_file(spark, tmp_path):
+    """An events file whose footer stores INT64 nanosecond timestamps
+    reads through ``read_table`` (and the stream reader's schema) as
+    session TIMESTAMP, truncated to the microsecond."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dw_etl_spark.sources.files import read_table
+    from dw_etl_spark.streaming import read_events_stream
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, 86_400_000_000_001]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+        }),
+        tmp_path / "events.parquet",
+    )
+    prior = spark.conf.get(_NANOS_AS_LONG)
+    spark.conf.set(_NANOS_AS_LONG, "false")
+    try:
+        ev = read_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(_NANOS_AS_LONG) == "true"
+        assert ev.schema["ts"].dataType == T.TimestampType()
+        got = ev.select("event_id", F.unix_micros("ts")).collect()
+        assert sorted(tuple(r) for r in got) == [
+            (i + 1, n // 1000) for i, n in enumerate(nanos)
+        ]
+        stream = read_events_stream(spark, str(tmp_path))
+        assert stream.schema["ts"].dataType == T.TimestampType()
+    finally:
+        spark.conf.set(_NANOS_AS_LONG, prior)
 
 
 # ---------------------------------------------------------------- scalar fns

@@ -4025,9 +4025,9 @@ def _q_dim_indicator_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     paying the window chain per variant (it is the dominant cost; the
     r9 merge initially doubled it). NOT dim-sized: the (UserId, Day)
     pivot index scales with the event corpus (400k rows at sf1, 12M at
-    sf30, ~1 GB checkpointed) — which is why the base's id assignment
-    uses the range-partitioned add_unique_id path, never a global
-    window (see interpolated_indicator_base)."""
+    sf30, ~1 GB checkpointed) — which is why the base's ids come from
+    per-UserId row numbers plus broadcast per-UserId offsets, never a
+    global window (see interpolated_indicator_base)."""
     from dw_etl_spark.plans.star_schema import interpolated_indicator_base
 
     # r15 (guide §1.2 — remove a pass): LAZY checkpoint. The eager form

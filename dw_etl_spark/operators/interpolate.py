@@ -18,7 +18,7 @@ partition's rows; time-series length per group is the only memory term.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -32,16 +32,11 @@ def seed_group_head(
     """If the first row of a group has NULL in ``cols`` → ``fill_value``
     (reference transform.py:280-282: A5 group-head + A6 conditional fill)."""
     w = Window.partitionBy(*group_by).orderBy(*order_by)
-    rn = F.row_number().over(w)
-    out = df
-    for c in cols:
-        out = out.withColumn(
-            c,
-            F.when((rn == 1) & F.col(c).isNull(), F.lit(fill_value)).otherwise(
-                F.col(c)
-            ),
-        )
-    return out
+    head = F.row_number().over(w) == 1
+    return df.withColumns({
+        c: F.when(head & F.col(c).isNull(), F.lit(fill_value)).otherwise(F.col(c))
+        for c in cols
+    })
 
 
 def interpolate_by_group(
@@ -82,8 +77,7 @@ def interpolate_by_group(
     )
     w_row = Window.partitionBy(*group_by).orderBy(order_by)
 
-    out = df.withColumn("__pos", F.row_number().over(w_row).cast("double"))
-    for c in cols:
+    def filled(c: str) -> Column:
         val = F.col(c).cast("double")
         pos_if = F.when(val.isNotNull(), F.col("__pos"))
         prev_v = F.last(val, ignorenulls=True).over(w_back)
@@ -94,11 +88,12 @@ def interpolate_by_group(
         interp = prev_v + (next_v - prev_v) * (F.col("__pos") - prev_p) / (
             next_p - prev_p
         )
-        filled = (
+        return (
             F.when(val.isNotNull(), val)
             .when(prev_v.isNull(), F.lit(None).cast("double"))  # leading: stay null
             .when(next_v.isNull(), prev_v)  # trailing: forward fill
             .otherwise(interp)
         )
-        out = out.withColumn(c, filled)
-    return out.drop("__pos")
+
+    out = df.withColumn("__pos", F.row_number().over(w_row).cast("double"))
+    return out.withColumns({c: filled(c) for c in cols}).drop("__pos")

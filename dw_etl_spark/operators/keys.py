@@ -5,18 +5,26 @@ Reference: contiguous 1-based Ids assigned by row order
 pandas inherits file/pivot order; a distributed engine must pin an
 explicit deterministic ordering.
 
-Two variants with different scale profiles:
+Both variants return Ids exactly 1..n in ``order_by`` order, identical
+across evaluations when that order is total:
 
-- ``add_sequential_id`` — exact contiguous ids via a global
-  ``row_number()`` window. A global window is a single-partition sort:
-  fine for dimension tables (what the reference assigns ids to — all
-  <100k rows), documented anti-pattern for facts at 100 TB.
-- ``add_unique_id`` — scalable: sort by the key columns (range
-  partitioner keeps it distributed), then per-partition offsets computed
-  from partition row-counts (one tiny driver collect of <num_partitions>
-  longs — the classic zipWithIndex trick, expressed DataFrame-side).
-  Ids are contiguous 1..n and deterministic given the ordering, with no
-  single-partition bottleneck.
+- ``add_sequential_id(df, order_by)`` — one global ``row_number()``
+  window: a single-partition sort, so only for dimension-sized inputs
+  (DIM_Date).
+- ``add_sequential_id(df, order_by, group_by=g)`` — Ids in ``(g,
+  order_by)`` order. ``row_number()`` runs per group, partitioned by
+  ``g``, so a frame already hash-partitioned on ``g`` keeps its
+  partitioning and a window on the same spec shares its sort. Each
+  group then adds its offset: a running sum, NULL groups first, over
+  one count row per group, broadcast and joined back null-safe. That
+  running sum is a single-partition window over the groups, so the
+  condition is that the group count is dimension-sized; the grouped
+  rows may be any size.
+- ``add_unique_id`` — for inputs with no small grouping key (the
+  fact): range-partition and sort by ``order_by``, then add
+  per-partition offsets from the partition row counts (zipWithIndex,
+  expressed DataFrame-side). It pins the sorted snapshot with
+  ``persist()``.
 """
 
 from __future__ import annotations
@@ -29,11 +37,36 @@ def add_sequential_id(
     df: DataFrame,
     order_by: list[str | Column],
     id_col: str = "Id",
+    group_by: list[str] | None = None,
 ) -> DataFrame:
-    """Contiguous 1-based id in one global window (dimension-sized inputs)."""
-    w = Window.orderBy(*order_by)
-    cols = [F.row_number().over(w).cast("long").alias(id_col), *df.columns]
-    return df.select(*cols)
+    """Contiguous 1-based id in ``(*group_by, *order_by)`` order.
+
+    Without ``group_by``: one global window (dimension-sized inputs).
+    With it: a per-group ``row_number()`` plus a broadcast per-group
+    offset; the only unpartitioned window sees one row per group.
+    """
+    if not group_by:
+        w = Window.orderBy(*order_by)
+        cols = [F.row_number().over(w).cast("long").alias(id_col), *df.columns]
+        return df.select(*cols)
+    keys = [f"__g{i}" for i in range(len(group_by))]
+    w_off = Window.orderBy(
+        *[F.col(k).asc_nulls_first() for k in keys]
+    ).rowsBetween(Window.unboundedPreceding, -1)
+    offset = F.coalesce(F.sum("__cnt").over(w_off), F.lit(0))
+    offsets = (
+        df.groupBy(*[F.col(g).alias(k) for g, k in zip(group_by, keys)])
+        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .select(*keys, offset.alias("__offset"))
+    )
+    rn = F.row_number().over(Window.partitionBy(*group_by).orderBy(*order_by))
+    on = [F.col(g).eqNullSafe(F.col(k)) for g, k in zip(group_by, keys)]
+    ids = (F.col("__offset") + F.col("__rn")).cast("long")
+    return (
+        df.withColumn("__rn", rn)
+        .join(F.broadcast(offsets), on)
+        .select(ids.alias(id_col), *df.columns)
+    )
 
 
 def add_unique_id(
@@ -41,7 +74,6 @@ def add_unique_id(
     order_by: list[str],
     id_col: str = "Id",
     num_partitions: int | None = None,
-    pin_input: bool = False,
 ) -> DataFrame:
     """Contiguous deterministic ids without a single-partition shuffle.
 
@@ -76,16 +108,6 @@ def add_unique_id(
     caps partitions at 2^33 rows — 8.6e9 rows per partition, far past
     any sane partition sizing.
 
-    ``pin_input=True`` additionally persists the INPUT before the
-    range exchange: the range partitioner's reservoir-sampling pass
-    otherwise recomputes the upstream lineage once more just to pick
-    boundaries. A/B at sf0.1 (guide §1.1): for the fact (scan +
-    broadcast join upstream) the pin LOSES — cache write+read of the
-    full rows costs more than the columnar re-scan (4.1 s vs 2.8 s);
-    for the windowed indicator chain it is a wash. Default False —
-    opt in only when the upstream is provably more expensive than one
-    full-table cache round-trip (e.g. feeding ids from a multi-join).
-
     The running-sum window over the count rows is "global" but sees one
     row per partition, not per data row — microscopic at any scale.
     """
@@ -94,10 +116,7 @@ def add_unique_id(
     n_parts = num_partitions or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "200"
     )
-    src = (
-        df.persist(StorageLevel.MEMORY_AND_DISK) if pin_input else df
-    )
-    parted = src.repartitionByRange(int(n_parts), *order_by).sortWithinPartitions(
+    parted = df.repartitionByRange(int(n_parts), *order_by).sortWithinPartitions(
         *order_by
     )
     mask = (1 << 33) - 1

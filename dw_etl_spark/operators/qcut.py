@@ -47,36 +47,52 @@ def _exact_ntile(rn: Column, cnt: Column, n: int) -> Column:
     ).otherwise(rem + F.floor((rn - boundary - 1) / F.greatest(base, F.lit(1))) + 1)
 
 
+def _value_and_out_cols(
+    value_col: str | list[str], out_col: str | list[str] | None
+) -> tuple[list[str], list[str]]:
+    """Normalize the one-or-many column arguments of the bucketers to
+    parallel lists; the default output name is ``{value}Bucket``."""
+    value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
+    if out_col is None:
+        return value_cols, [f"{c}Bucket" for c in value_cols]
+    out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
+    if len(out_cols) != len(value_cols):
+        raise ValueError("value_col and out_col must have the same length")
+    return value_cols, out_cols
+
+
 def ntile_buckets(
     df: DataFrame,
     group_by: list[str],
-    value_col: str,
+    value_col: str | list[str],
     n: int = 3,
     labels: list[str] | None = None,
-    out_col: str | None = None,
+    out_col: str | list[str] | None = None,
     tiebreak: list[str | Column] | None = None,
 ) -> DataFrame:
     """Equal-count buckets per group; NULL values → NULL bucket.
 
     Ties at bucket boundaries split by (value, tiebreak) order — pass
-    ``tiebreak`` for cross-engine determinism.
+    ``tiebreak`` for cross-engine determinism. ``value_col`` and
+    ``out_col`` may be parallel lists: every column is bucketed in one
+    projection, the same as one call per column.
     """
     labels = labels or DEFAULT_LABELS[:n]
-    out_col = out_col or f"{value_col}Bucket"
-    val = F.col(value_col)
-    # nulls sort last so non-null rows get rn ∈ 1..count(value)
-    w_order = Window.partitionBy(*group_by).orderBy(
-        val.asc_nulls_last(), *(tiebreak or [])
+    value_cols, out_cols = _value_and_out_cols(value_col, out_col)
+    label_map = F.create_map(
+        *[F.lit(x) for i, lb in enumerate(labels, 1) for x in (i, lb)]
     )
     w_part = Window.partitionBy(*group_by)
-    rn = F.row_number().over(w_order)
-    cnt = F.count(val).over(w_part)
-    tile = _exact_ntile(rn, cnt, n)
-    label_map = F.element_at(
-        F.create_map(*[F.lit(x) for i, lb in enumerate(labels, 1) for x in (i, lb)]),
-        tile.cast("int"),
-    )
-    return df.withColumn(out_col, F.when(val.isNotNull(), label_map))
+
+    def bucket(c: str) -> Column:
+        val = F.col(c)
+        # nulls sort last so non-null rows get rn ∈ 1..count(value)
+        w_order = w_part.orderBy(val.asc_nulls_last(), *(tiebreak or []))
+        rn = F.row_number().over(w_order)
+        tile = _exact_ntile(rn, F.count(val).over(w_part), n)
+        return F.when(val.isNotNull(), F.element_at(label_map, tile.cast("int")))
+
+    return df.withColumns({o: bucket(c) for c, o in zip(value_cols, out_cols)})
 
 
 def _qcut_labels(n_bins: int, labels: list[str]) -> list[str]:
@@ -327,11 +343,7 @@ def qcut_by_group_expr(
     ``test_qcut_tie_rank_ulp_divergence_documented``. Use
     ``qcut_by_group`` when bit-exact pandas behavior is required.
     """
-    value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
-    if out_col is None:
-        out_cols = [f"{c}Bucket" for c in value_cols]
-    else:
-        out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
+    value_cols, out_cols = _value_and_out_cols(value_col, out_col)
     labels = labels or DEFAULT_LABELS
 
     edge_map = _group_quantile_edges(
@@ -486,11 +498,7 @@ def qcut_by_group(
     import pandas as pd
 
     labels = labels or DEFAULT_LABELS
-    value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
-    if out_col is None:
-        out_cols = [f"{c}Bucket" for c in value_cols]
-    else:
-        out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
+    value_cols, out_cols = _value_and_out_cols(value_col, out_col)
     schema_out = T.StructType(
         [
             *df.schema.fields,

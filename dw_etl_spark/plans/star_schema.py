@@ -91,15 +91,31 @@ def interpolated_indicator_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     long→wide (A4) → group-head null seed (A5/A6) → per-group linear
     interpolation (A7) → sequential Id (F7). Split out so a caller
     producing BOTH tercile semantics (the merged dim_indicator gate
-    query) materializes this chain once and buckets twice."""
-    events = read_table(spark, sf_dir, "events")
+    query) materializes this chain once and buckets twice.
+
+    Contract:
+
+    - The event rows cross exactly one exchange, a hash partitioning on
+      ``UserId``. It satisfies the pivot's ``(UserId, Day)`` grouping
+      and every ``UserId`` window, so the scan is not spread first and
+      no later step shuffles the rows again.
+    - Ids are 1..n in ``(UserId, Day)`` order, a total order because
+      ``(UserId, Day)`` is the pivot index. They come from per-UserId
+      row numbers plus a broadcast per-UserId offset. The offsets branch
+      reads only the ``(UserId, Day)`` keys, so column pruning gives it
+      its own keys-only exchange on the same ``UserId`` partitioning.
+    - The only unpartitioned window is that offsets sum, and it sees one
+      row per UserId. The pivot index scales with the event corpus
+      (12M rows at sf30), so no window may order its rows on a single
+      partition.
+    """
+    events = read_table(spark, sf_dir, "events", spread=False)
     # The indicator value is a 2-decimal fixed-point quantity (fixture
     # contract, TESTDATA.md): aggregate it as exact integer cents so
     # the group mean is INDEPENDENT of partial-aggregation order. A
-    # float avg() is not — the r11 sf1 sweep caught eight group means
-    # landing exactly on the round-to-6 .5 boundary (values of the
-    # form k/3200) where a 1-ulp engine to oracle sum-order difference
-    # flipped the compared digit. sum(BIGINT) is order-free; the two
+    # float avg() is not: group means of the form k/3200 land exactly
+    # on the round-to-6 .5 boundary, where a 1-ulp sum-order difference
+    # flips the compared digit. sum(BIGINT) is order-free; the two
     # divisions below are correctly rounded from identical inputs on
     # both engines, so every downstream lerp/tercile input is
     # bit-identical at any scale factor.
@@ -110,7 +126,7 @@ def interpolated_indicator_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("Cents"),
     )
     wide = pivot_wide(
-        long_form,
+        long_form.repartition("UserId"),
         index=["UserId", "Day"],
         pivot_col="Indicator",
         value_col="Cents",
@@ -123,17 +139,7 @@ def interpolated_indicator_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     filled = interpolate_by_group(
         seeded, group_by=["UserId"], order_by="Day", cols=EVENT_TYPES
     )
-    # The indicator dim scales with the event corpus ((UserId, Day) is
-    # the pivot index: 12M rows at sf30), so ids must come from the
-    # scalable range-partitioned path — the global-window
-    # ``add_sequential_id`` is reserved for genuinely dimension-sized
-    # inputs (dim_date). Ids are identical either way ((UserId, Day) is
-    # unique here, so the total order is the same), and the pinned
-    # partitioning doubles as the shared materialization for callers
-    # that bucket this base twice. The sf30 rung caught the old path:
-    # two concurrently-planned 12M-row single-partition sorts exhausted
-    # the 16g-driver execution pool (UNABLE_TO_ACQUIRE_MEMORY).
-    return add_unique_id(filled, order_by=["UserId", "Day"])
+    return add_sequential_id(filled, order_by=["Day"], group_by=["UserId"])
 
 
 def build_dim_indicator(
@@ -159,6 +165,11 @@ def build_dim_indicator(
     ``base`` injects a precomputed (typically already-materialized)
     ``interpolated_indicator_base`` frame so two bucket variants can
     share one chain; the caller owns its lifecycle then.
+
+    Contract: the Ids, and with them the count-mode tiebreak, are the
+    base's ``(UserId, Day)`` order. Count mode buckets all five
+    indicators in one projection over ``Day`` windows; without a
+    ``base``, value mode runs the base chain once.
     """
     if qcut not in ("count", "value"):
         raise ValueError(f"qcut must be 'count' or 'value', got {qcut!r}")
@@ -166,49 +177,30 @@ def build_dim_indicator(
     with_id = base if caller_owns_base else interpolated_indicator_base(
         spark, sf_dir
     )
-    if qcut == "value" and caller_owns_base:
+    out_cols = [f"{c}Bucket" for c in EVENT_TYPES]
+    if qcut == "value":
+        if not caller_owns_base:
+            # qcut_by_group_expr reads the frame twice (histogram pass +
+            # bucket assembly); pin the interpolated frame so the
+            # pivot/window chain runs once, not twice. The checkpoint is
+            # lazy: the edge fit's first job materializes it as part of
+            # its own pass.
+            with_id = with_id.localCheckpoint(eager=False)
         bucketed = qcut_by_group_expr(
-            with_id,
-            group_by=["Day"],
-            value_col=list(EVENT_TYPES),
-            n=3,
-            out_col=[f"{c}Bucket" for c in EVENT_TYPES],
-        )
-    elif qcut == "value":
-        # qcut_by_group_expr reads the frame twice (histogram pass +
-        # bucket assembly); pin the dim-sized interpolated frame so the
-        # pivot/window chain runs once, not twice (dedup_clusters
-        # precedent — blocks are ~MBs and die with the frame). Lazy
-        # (r15): the edge fit's first job materializes the pin as part
-        # of its own pass instead of after a dedicated serial job.
-        with_id = with_id.localCheckpoint(eager=False)
-        bucketed = qcut_by_group_expr(
-            with_id,
-            group_by=["Day"],
-            value_col=list(EVENT_TYPES),
-            n=3,
-            out_col=[f"{c}Bucket" for c in EVENT_TYPES],
+            with_id, group_by=["Day"], value_col=EVENT_TYPES, n=3, out_col=out_cols
         )
     else:
-        bucketed = with_id
-        for ind in EVENT_TYPES:
-            bucketed = ntile_buckets(
-                bucketed,
-                group_by=["Day"],
-                value_col=ind,
-                n=3,
-                out_col=f"{ind}Bucket",
-                tiebreak=[F.col("Id")],
-            )
+        bucketed = ntile_buckets(
+            with_id,
+            group_by=["Day"],
+            value_col=EVENT_TYPES,
+            n=3,
+            out_col=out_cols,
+            tiebreak=[F.col("Id")],
+        )
     # round for cross-engine double stability (partial-agg order varies)
     rounded = [F.round(F.col(c), 6).alias(c) for c in EVENT_TYPES]
-    return bucketed.select(
-        "Id",
-        "UserId",
-        "Day",
-        *rounded,
-        *[f"{c}Bucket" for c in EVENT_TYPES],
-    )
+    return bucketed.select("Id", "UserId", "Day", *rounded, *out_cols)
 
 
 def build_fact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -182,6 +182,29 @@ def test_add_sequential_id_contiguous(spark):
     ]
 
 
+def test_add_sequential_id_grouped_equals_global(spark):
+    """The per-group form (row numbers within ``g`` plus a broadcast
+    per-group offset) gives the same Ids as one global window over
+    ``(g, t)``: NULL groups and NULL order keys included (both sort
+    first), more groups than partitions, AQE on. Ids are exactly 1..n
+    and two evaluations agree."""
+    rows = [(g, t) for g in range(40) for t in range(g % 5 + 1)]
+    rows += [(g, None) for g in range(0, 40, 7)]
+    rows += [(None, t) for t in (3, 1, 2)] + [(None, None)]
+    df = spark.createDataFrame(rows, "g int, t int").repartition(3)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        grouped = add_sequential_id(df, ["t"], group_by=["g"])
+        first = sorted(map(tuple, grouped.collect()))
+        second = sorted(map(tuple, grouped.collect()))
+        want = sorted(map(tuple, add_sequential_id(df, ["g", "t"]).collect()))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert [r[0] for r in first] == list(range(1, len(rows) + 1))
+    assert first == second == want
+
+
 def test_add_unique_id_single_data_exchange(spark):
     """r14 optimization pin: the id assignment must move the data
     through exactly ONE exchange (the range partitioner). The previous
@@ -437,6 +460,23 @@ def test_ntile_buckets_nulls_stay_null(spark):
     got = ntile_buckets(df, ["year"], "v", tiebreak=[F.col("id")])
     m = {r["id"]: r["vBucket"] for r in got.collect()}
     assert m == {1: "Low", 2: "Medium", 3: "High", 4: None}
+
+    # the list form buckets every column in one call, the same as one
+    # call per column
+    two = df.withColumn("w", F.when(F.col("id") != 2, -F.col("id")))
+    both = ntile_buckets(
+        two, ["year"], ["v", "w"], out_col=["vb", "wb"], tiebreak=[F.col("id")]
+    )
+    one_by_one = ntile_buckets(
+        ntile_buckets(two, ["year"], "v", out_col="vb", tiebreak=[F.col("id")]),
+        ["year"], "w", out_col="wb", tiebreak=[F.col("id")],
+    )
+    assert sorted(map(tuple, both.collect())) == sorted(
+        map(tuple, one_by_one.collect())
+    )
+    assert {r["id"]: r["wb"] for r in both.collect()} == {
+        1: "High", 2: None, 3: "Medium", 4: "Low"
+    }
 
 
 def test_qcut_by_group_matches_pandas(spark):

@@ -136,10 +136,9 @@ def test_indicator_base_id_window_is_partitioned(spark):
     window: its input is the (UserId, Day) pivot index, which scales
     with the event corpus (12M rows at sf30 — the sf30 ladder rung
     OOM'd the 16g driver on two concurrently-planned single-partition
-    sorts of it before the switch to add_unique_id). Allowed
-    unpartitioned windows are only add_unique_id's one-row-per-
-    partition offsets sum — anything ordering the scaled rows
-    themselves (by Day) must carry a partition spec.
+    sorts of it). The only allowed unpartitioned window is the Id
+    offsets sum, which sees one row per UserId — anything ordering the
+    scaled rows themselves (by Day) must carry a partition spec.
     """
     from dw_etl_spark.plans.star_schema import interpolated_indicator_base
 
@@ -157,6 +156,44 @@ def test_indicator_base_id_window_is_partitioned(spark):
             assert "Day" not in ln, (
                 "indicator rows flow through a single-partition window:\n" + ln
             )
+
+
+def test_indicator_base_moves_its_rows_once(spark):
+    """The indicator chain hash-partitions the event rows on ``UserId``
+    once: that exchange feeds the pivot's ``(UserId, Day)`` grouping and
+    every ``UserId`` window. The Id offsets need one count row per
+    UserId; their branch ships only the ``(UserId, Day)`` keys, on the
+    same ``UserId`` partitioning. No range partitioning, round-robin
+    spread or cached relation remains."""
+    import re
+
+    from dw_etl_spark.plans.star_schema import interpolated_indicator_base
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = (
+            interpolated_indicator_base(spark, SF_SMOKE)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    lines = plan.splitlines()
+    hashed = [
+        (ln, nxt)
+        for ln, nxt in zip(lines, lines[1:])
+        if re.search(r"(?<!Reused)Exchange hashpartitioning\(", ln)
+    ]
+    assert hashed, plan
+    for ln, _ in hashed:
+        assert re.search(r"Exchange hashpartitioning\(UserId#\d+L?, \d+\)", ln), ln
+    # exactly one exchange carries the indicator values into the pivot
+    values = [ln for ln, nxt in hashed if "AS Indicator" in nxt]
+    assert len(values) == 1, plan
+    for banned in ("rangepartitioning", "RoundRobinPartitioning", "InMemoryRelation"):
+        assert banned not in plan, plan
 
 
 def test_salted_join_rejects_outer_joins(spark):
